@@ -51,6 +51,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from weather_bigquery_lakehouse_spark import artifacts
 from weather_bigquery_lakehouse_spark.session import build_session
 from weather_bigquery_lakehouse_spark.operators import dedup as _dd
 from weather_bigquery_lakehouse_spark.plans import ALL_QUERIES
@@ -196,7 +197,7 @@ EXTENDED = [
     "mixture_temperature_sample",
     "embedding_covariance",
     # round-8: the trained-quantizer gates OWN the cold k-means builds
-    # (PRE_REP purges their one-slot memos each rep); ann_recall_report
+    # (PRE_REP clears their artifact kinds each rep); ann_recall_report
     # runs after them over the warm shared frames — the production shape,
     # where one registry sweep trains each quantizer once (the
     # embedding_pair_clusters / embedding_dup_clusters precedent).
@@ -206,7 +207,7 @@ EXTENDED = [
     "ivf_cell_occupancy",
     "cardinality_hll_documents",
     # round-8 late additions: bpe_merge_table OWNS the cold tokenizer
-    # training (PRE_REP purges the one-slot memo); bpe_vocab and
+    # training (PRE_REP clears its artifact kind); bpe_vocab and
     # bpe_token_stats run after it over the warm trained state — the
     # production shape (train once, consume everywhere).
     # snapshot_diff_orders lands its two versioned snapshots on first
@@ -268,63 +269,31 @@ def _reset_chunk_index_state(sf_dir: str) -> None:
             shutil.rmtree(os.path.join(root, sub), ignore_errors=True)
 
 
-def _reset_pair_cluster_cache(_sf_dir: str) -> None:
-    """embedding_dup_clusters OWNS the iterative pair+CC cost in this
-    record: purge the shared cluster memo before each of its reps so its
-    median times the cold build. The sibling audits (contrastive_pairs,
-    cluster_label_purity) run AFTER it in EXTENDED and are timed over the
-    warm shared frame — the production shape, where one registry sweep
-    derives clusters once (round-6 verdict #5)."""
-    from weather_bigquery_lakehouse_spark.operators.similarity import (
-        _PAIR_CLUSTER_CACHE,
-    )
-
-    _PAIR_CLUSTER_CACHE.clear()
-
-
-def _reset_kmeans_codebook_cache(_sf_dir: str) -> None:
-    """ann_kmeans_codebook owns the cold PQ-codebook training cost."""
-    from weather_bigquery_lakehouse_spark.operators.kmeans import _PQ_CB_CACHE
-
-    _PQ_CB_CACHE.clear()
-
-
-def _reset_kmeans_centroid_cache(_sf_dir: str) -> None:
-    """ann_kmeans_centroids owns the cold IVF-centroid training cost."""
-    from weather_bigquery_lakehouse_spark.operators.kmeans import _CENTROID_CACHE
-
-    _CENTROID_CACHE.clear()
-
-
-def _reset_bpe_cache(_sf_dir: str) -> None:
-    """bpe_merge_table owns the cold tokenizer-training cost."""
-    from weather_bigquery_lakehouse_spark.operators.bpe import _BPE_CACHE
-
-    _BPE_CACHE.clear()
-
+#: Entries that OWN a cold artifact build: before each of their reps the
+#: bench clears that one artifacts.shared kind, so the median times the
+#: build. Their siblings run AFTER them in EXTENDED and are timed over the
+#: warm shared value — the production shape, where one registry sweep
+#: derives it once (round-6 verdict #5). The reset is per kind, never a
+#: global clear: ann_kmeans_centroids' reset would otherwise wipe the
+#: codebook ann_recall_report reuses next. embedding_covariance's stats
+#: frame is cache()d, and Spark's CacheManager matches canonicalized
+#: plans across reps too, so without its reset reps 2..n would time cache
+#: hits instead of the kernel pass.
+_OWNED_KIND = {
+    "embedding_dup_clusters": "pair_clusters",
+    "ann_kmeans_codebook": "pq_codebook",
+    "ann_kmeans_centroids": "centroids",
+    "bpe_merge_table": "bpe",
+    "embedding_covariance": "covariance_stats",
+}
 
 # per-query state reset run before EACH rep (outside the timed section)
-def _reset_covariance_cache(_sf_dir: str) -> None:
-    """embedding_covariance cache()s its dim²-bounded stats frame so the
-    g/s/n slices share ONE corpus pass within a run — but Spark's
-    CacheManager matches canonicalized plans ACROSS runs too, so without
-    a purge reps 2..n would time cache hits instead of the kernel pass.
-    The purge is TARGETED (the operator registers its cached frames and
-    unpersists exactly those), not a global clearCache."""
-    from weather_bigquery_lakehouse_spark.operators.embeddings import (
-        purge_covariance_cache,
-    )
-
-    purge_covariance_cache()
-
-
 PRE_REP = {
     "streaming_chunk_index": _reset_chunk_index_state,
-    "embedding_dup_clusters": _reset_pair_cluster_cache,
-    "ann_kmeans_codebook": _reset_kmeans_codebook_cache,
-    "ann_kmeans_centroids": _reset_kmeans_centroid_cache,
-    "bpe_merge_table": _reset_bpe_cache,
-    "embedding_covariance": _reset_covariance_cache,
+    **{
+        name: (lambda _sf_dir, kind=kind: artifacts.clear(kind))
+        for name, kind in _OWNED_KIND.items()
+    },
 }
 
 

@@ -847,13 +847,16 @@ def test_embedding_covariance_numerator_survives_int64_overflow(spark):
 def test_covariance_cache_evicts_same_plan_and_never_serves_stale(
     spark, tmp_path
 ):
-    """The stats-cache registry (ADVICE r10): repeat covariance calls over
-    the same corpus must not grow the registry (same-canonicalized-plan
-    eviction), and recomputing after the source parquet is overwritten IN
-    PLACE must return fresh values — Spark's CacheManager would otherwise
-    match the canonicalized plan and serve the stale materialization."""
+    """The covariance stats slot of the artifact store (ADVICE r10):
+    repeat covariance calls over the same corpus reuse the slot's stats
+    frame instead of caching another, and recomputing after the source
+    parquet is overwritten IN PLACE must return fresh values — the
+    rewrite fails the input fingerprint, so the old frame is unpersisted
+    before the new cache(); Spark's CacheManager would otherwise match
+    the canonicalized plan and serve the stale materialization."""
     import numpy as np
 
+    from weather_bigquery_lakehouse_spark import artifacts
     from weather_bigquery_lakehouse_spark.operators import embeddings as em
 
     def write(rows):
@@ -865,14 +868,18 @@ def test_covariance_cache_evicts_same_plan_and_never_serves_stale(
         out = {(r.i, r.j): r.cov for r in em.embedding_covariance(emb, 2).collect()}
         return out[(i, j)]
 
-    em.purge_covariance_cache()
+    def slot():
+        return artifacts._SLOTS.get("covariance_stats")
+
+    artifacts.clear("covariance_stats")
     try:
         write([(k, [float(k), float(k % 3)]) for k in range(10)])
         first = cov_cell(0, 0)
-        assert len(em._COV_STATS_CACHE) == 1
-        # repeat over the SAME corpus: registry must not grow
+        held = slot()
+        assert held is not None
+        # repeat over the SAME corpus: the slot's stats frame is reused
         assert cov_cell(0, 0) == first
-        assert len(em._COV_STATS_CACHE) == 1, "same-plan frame not evicted"
+        assert slot() is held, "same-corpus call rebuilt its stats"
 
         # in-place overwrite: the recompute must see the NEW data
         write([(k, [2.0 * k, float(k % 5)]) for k in range(10)])
@@ -880,10 +887,12 @@ def test_covariance_cache_evicts_same_plan_and_never_serves_stale(
         xs = np.array([2.0 * k for k in range(10)])
         assert abs(second - xs.var()) < 1e-4, (second, xs.var())
         assert second != first
-        assert len(em._COV_STATS_CACHE) == 1
+        assert slot() is not held
+        _cov, old_stats = held.value
+        assert not old_stats.is_cached, "evicted stats frame still cached"
     finally:
-        em.purge_covariance_cache()
-    assert not em._COV_STATS_CACHE
+        artifacts.clear("covariance_stats")
+    assert slot() is None
 
 
 def test_ivfpq_reduces_to_exhaustive_pq_at_full_probe_width(spark):
@@ -957,27 +966,185 @@ def test_incremental_lsh_equals_full_run_filtered(spark):
     assert kinds == {"new_new", "new_base"}
 
 
-def test_embedding_pair_clusters_memo_shares_work(spark):
-    """The audit family's shared front end: same cache_key → the SAME
-    checkpointed frames come back (the CC iteration runs once per sweep);
-    no key → fresh frames; results identical either way."""
-    from weather_bigquery_lakehouse_spark.operators import similarity as sim
-
-    emb = spark.createDataFrame(
-        [(0, [1.0, 0.0]), (1, [1.0, 0.01]), (2, [0.0, 1.0]), (3, [0.01, 1.0])],
-        "vec_id long, embedding array<float>",
+def _artifact_cases():
+    """kind → (input table, or None for a codebook parquet the test
+    writes; the public operator call a registry entry makes on it)."""
+    from weather_bigquery_lakehouse_spark.operators import bpe
+    from weather_bigquery_lakehouse_spark.operators import embeddings as em
+    from weather_bigquery_lakehouse_spark.operators import kmeans as km
+    from weather_bigquery_lakehouse_spark.plans.extensions import (
+        _EMB_DUP_THRESHOLD,
+        _PLANES,
     )
-    planes = [[0.3, 0.7]]
-    sim._PAIR_CLUSTER_CACHE.clear()
-    p1, l1 = sim.embedding_pair_clusters(emb, planes, 0.3, cache_key="k")
-    p2, l2 = sim.embedding_pair_clusters(emb, planes, 0.3, cache_key="k")
-    assert p1 is p2 and l1 is l2  # memo hit: shared WORK, not a rebuild
-    p3, l3 = sim.embedding_pair_clusters(emb, planes, 0.3)
-    assert p3 is not p1 and l3 is not l1  # no key → no memo
-    key_rows = {(r.node, r.comp) for r in l1.collect()}
-    fresh_rows = {(r.node, r.comp) for r in l3.collect()}
-    assert key_rows == fresh_rows and len(key_rows) == 4
-    sim._PAIR_CLUSTER_CACHE.clear()
+
+    return {
+        "pair_clusters": (
+            "embeddings",
+            lambda f: sim.embedding_pair_clusters(f, _PLANES, _EMB_DUP_THRESHOLD),
+        ),
+        "pq_codebook": (
+            "embeddings",
+            lambda f: km.kmeans_pq_codebook(f, dim=64, m=8, n_codes=16, n_iter=2),
+        ),
+        "centroids": (
+            "embeddings",
+            lambda f: km.kmeans_centroids(f, n_cells=4, n_iter=2, dim=64),
+        ),
+        "bpe": ("documents", lambda f: bpe.bpe_train(f, n_merges=2)),
+        "covariance_stats": (
+            "embeddings",
+            lambda f: em.embedding_covariance(f, 64),
+        ),
+        "codebook_check": (None, lambda f: sim._as_codebook(f, 4)),
+    }
+
+
+@pytest.mark.parametrize(
+    "kind",
+    [
+        "pair_clusters",
+        "pq_codebook",
+        "centroids",
+        "bpe",
+        "covariance_stats",
+        "codebook_check",
+    ],
+)
+def test_artifact_store_shares_work(spark, sf_dir, tmp_path, kind):
+    """Two registry entries read the same path separately; the second
+    one's call must get the IDENTICAL stored value back and launch zero
+    Spark jobs — identity comes from the input frame (sameSemantics +
+    file fingerprint), not from a caller-supplied key."""
+    from weather_bigquery_lakehouse_spark import artifacts
+
+    table, build = _artifact_cases()[kind]
+    if table is None:
+        path = str(tmp_path / "cb")
+        spark.createDataFrame(
+            [(s, c, [float(s), float(c)]) for s in range(4) for c in range(4)],
+            "sub_id int, code_id int, __cv array<double>",
+        ).write.parquet(path)
+    else:
+        path = f"{sf_dir}/{table}.parquet"
+    sc = spark.sparkContext
+
+    def jobs_of(group, call):
+        sc.setJobGroup(group, f"artifact store: {kind}")
+        try:
+            return call(), list(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    # read outside the job groups: parquet schema inference runs a job
+    a, b = spark.read.parquet(path), spark.read.parquet(path)
+    artifacts.clear(kind)
+    try:
+        first, first_jobs = jobs_of(f"artifact-build-{kind}", lambda: build(a))
+        # covariance's build is lazy (its stats frame is only cache()d)
+        assert first_jobs or kind == "covariance_stats"
+        second, second_jobs = jobs_of(f"artifact-hit-{kind}", lambda: build(b))
+        assert second is first
+        assert second_jobs == []
+    finally:
+        artifacts.clear(kind)
+
+
+@pytest.mark.parametrize("scorer", ["pq_topk", "ivfpq_topk"])
+@pytest.mark.parametrize("producer", ["kmeans_pq_codebook", "pq_codebook_standin"])
+def test_codebook_checked_at_one_m_is_rechecked_at_another(
+    spark, sf_dir, producer, scorer
+):
+    """A codebook validated (or built complete) at m=4 and handed to a
+    scorer at m=8 must fail the completeness check — ADC would otherwise
+    score over half the subspaces with no error (ADVICE r14)."""
+    from weather_bigquery_lakehouse_spark.operators import kmeans as km
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    probes = emb.where(F.col("vec_id") < 4)
+    if producer == "kmeans_pq_codebook":
+        trained = km.kmeans_pq_codebook(emb, dim=64, m=4, n_codes=16, n_iter=1)
+        cb = sim._as_codebook(trained, 4)  # validated for m=4
+    else:
+        cb = sim.pq_codebook_standin(emb, dim=64, m=4, n_codes=16)
+    kw = dict(dim=64, m=8, n_codes=16, k=5, codebook=cb)
+    if scorer == "ivfpq_topk":
+        kw.update(n_cells=4, n_probe_cells=2)
+    with pytest.raises(ValueError, match="codebook incomplete"):
+        getattr(sim, scorer)(emb, probes, **kw)
+
+
+def test_registry_artifacts_follow_an_in_place_rewrite(spark, sf_dir, tmp_path):
+    """Overwrite an embeddings parquet IN PLACE under the same directory,
+    then call the registry entries again: each must equal a fresh
+    computation over the new data — a path-keyed memo would serve the
+    trained codebook and clusters of the old file."""
+    import pyarrow.parquet as pq
+
+    from weather_bigquery_lakehouse_spark import artifacts
+    from weather_bigquery_lakehouse_spark.plans import ALL_QUERIES
+
+    src = pq.read_table(f"{sf_dir}/embeddings.parquet")
+    target = tmp_path / "embeddings.parquet"
+    names = ("ann_kmeans_codebook", "embedding_dup_clusters")
+
+    def run():
+        return {
+            n: sorted(tuple(r) for r in ALL_QUERIES[n].fn(spark, str(tmp_path)).collect())
+            for n in names
+        }
+
+    pq.write_table(src.slice(0, 300), target)
+    before = run()
+    pq.write_table(src.slice(200, 300), target)  # same file name, new rows
+    after = run()
+    artifacts.clear()
+    fresh = run()
+    for n in names:
+        assert after[n] == fresh[n], n
+        assert after[n] != before[n], n  # the rewrite really changed it
+
+
+def test_bench_order_shares_trained_state(spark, sf_dir, monkeypatch):
+    """bench's per-kind PRE_REP resets keep the production sharing: after
+    the owner entries' resets and runs, ann_recall_report trains no
+    k-means quantizer and the audit siblings run no connected
+    components. A global clear in ann_kmeans_centroids' reset would wipe
+    the codebook the report reuses."""
+    import collections
+
+    import bench
+    from weather_bigquery_lakehouse_spark.operators import kmeans as km
+    from weather_bigquery_lakehouse_spark.plans import ALL_QUERIES
+
+    calls = collections.Counter()
+
+    def counting(name, fn):
+        def wrapped(*a, **kw):
+            calls[name] += 1
+            return fn(*a, **kw)
+
+        return wrapped
+
+    monkeypatch.setattr(
+        km, "train_grouped_codebook", counting("kmeans", km.train_grouped_codebook)
+    )
+    monkeypatch.setattr(
+        dd, "connected_components", counting("cc", dd.connected_components)
+    )
+
+    def run(name):
+        bench.PRE_REP.get(name, lambda _d: None)(sf_dir)
+        ALL_QUERIES[name].fn(spark, sf_dir)
+
+    run("ann_kmeans_codebook")
+    run("ann_kmeans_centroids")
+    run("embedding_dup_clusters")
+    assert calls == {"kmeans": 2, "cc": 1}  # the owners built cold
+    calls.clear()
+    run("ann_recall_report")
+    run("contrastive_pairs")
+    run("cluster_label_purity")
+    assert not calls, calls
 
 
 def test_pq_incomplete_codebook_raises(spark):

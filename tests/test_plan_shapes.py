@@ -564,8 +564,8 @@ def test_compaction_plan_window_is_partition_keyed(spark, sf_dir):
 
 def test_embedding_covariance_cache_is_only_cache_user():
     """Every .cache()/persist() in the package must live in the
-    covariance stats path, where _COV_STATS_CACHE registration +
-    purge_covariance_cache() manage its lifetime — a cache user anywhere
+    covariance stats path, whose artifact-store slot manages its
+    lifetime (unpersisted on eviction and clear) — a cache user anywhere
     else would leak CacheManager entries with no purge discipline (pin
     by file, not line number, so unrelated edits don't churn it)."""
     import ast

@@ -104,9 +104,9 @@ def test_covariance_constructed_negative_zero_cell(spark, tmp_path):
     """Reconstruct the round-10 failure in miniature: a 2-dim corpus whose
     off-diagonal covariance is a tiny NEGATIVE quantity that rounds to
     zero — the engine and the oracle formulation must both emit +0.0."""
+    from weather_bigquery_lakehouse_spark import artifacts
     from weather_bigquery_lakehouse_spark.operators.embeddings import (
         embedding_covariance,
-        purge_covariance_cache,
     )
 
     # cov(x0, x1) = -1e-12-ish: two dims, three rows, built so
@@ -120,7 +120,7 @@ def test_covariance_constructed_negative_zero_cell(spark, tmp_path):
     try:
         out = {(r.i, r.j): r.cov for r in embedding_covariance(emb, dim=2).collect()}
     finally:
-        purge_covariance_cache()
+        artifacts.clear("covariance_stats")
     # premise check: the raw quotient for (0,1) is negative and tiny
     assert all(not _is_neg_zero(v) for v in out.values()), out
 

@@ -51,6 +51,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .. import artifacts
 from .text import tokens_expr
 
 #: Words longer than this are dropped from training (vocab hygiene: the
@@ -148,26 +149,21 @@ def apply_merges_expr(syms: Column, merges: list[tuple[str, str]]) -> Column:
     return out
 
 
-#: One-slot memo for the trained state — the `kmeans._PQ_CB_CACHE`
-#: contract: checkpointed frames are session-local (applicationId in the
-#: key), so a registry sweep where several entries read the same trained
-#: tokenizer (merge table, vocab) trains ONCE.
-_BPE_CACHE: dict[tuple, tuple] = {}
-
-
 def bpe_train(
     df: DataFrame,
     n_merges: int = 8,
     text_col: str = "text",
     max_word_len: int = MAX_WORD_LEN,
-    cache_key: object = None,
 ) -> tuple[list[tuple[str, str, int]], DataFrame]:
     """Train ``n_merges`` BPE merges on a corpus. Returns
     ``(merges, words)`` where ``merges`` is the ranked list
     ``[(lhs, rhs, pair_count), …]`` (driver-side metadata — 2 strings and
     a count per rank) and ``words`` is the final word-type table
     ``(word, n, syms)`` with each word segmented under all trained merges
-    (localCheckpointed, ≤ vocab rows — reuse without retraining).
+    (localCheckpointed, ≤ vocab rows — reuse without retraining). The
+    trained state is shared through :func:`..artifacts.shared`, so the
+    registry entries reading one corpus's tokenizer (merge table, vocab,
+    token stats) train ONCE.
 
     Training stops early only if the corpus runs out of pairs (every word
     fused to one symbol) — with the oracle's LEFT JOIN formulation both
@@ -175,36 +171,28 @@ def bpe_train(
     """
     if n_merges < 0:
         raise ValueError(f"need n_merges >= 0; got {n_merges}")
-    key = None
-    if cache_key is not None:
-        key = (
-            df.sparkSession.sparkContext.applicationId,
-            cache_key, n_merges, text_col, max_word_len,
-        )
-        hit = _BPE_CACHE.get(key)
-        if hit is not None:
-            return hit
-    words = word_counts(df, text_col, max_word_len).localCheckpoint(eager=True)
-    merges: list[tuple[str, str, int]] = []
-    for _ in range(n_merges):
-        top = (
-            pair_counts(words)
-            .orderBy(F.desc("cnt"), F.asc("lhs"), F.asc("rhs"))
-            .limit(1)
-            .collect()
-        )
-        if not top:
-            break
-        lhs, rhs, cnt = top[0]["lhs"], top[0]["rhs"], int(top[0]["cnt"])
-        merges.append((lhs, rhs, cnt))
-        words = words.select(
-            "word", "n", merge_scan_expr(F.col("syms"), lhs, rhs).alias("syms")
-        ).localCheckpoint(eager=True)
-    out = (merges, words)
-    if key is not None:
-        _BPE_CACHE.clear()
-        _BPE_CACHE[key] = out
-    return out
+
+    def train() -> tuple[list[tuple[str, str, int]], DataFrame]:
+        words = word_counts(df, text_col, max_word_len).localCheckpoint(eager=True)
+        merges: list[tuple[str, str, int]] = []
+        for _ in range(n_merges):
+            top = (
+                pair_counts(words)
+                .orderBy(F.desc("cnt"), F.asc("lhs"), F.asc("rhs"))
+                .limit(1)
+                .collect()
+            )
+            if not top:
+                break
+            lhs, rhs, cnt = top[0]["lhs"], top[0]["rhs"], int(top[0]["cnt"])
+            merges.append((lhs, rhs, cnt))
+            words = words.select(
+                "word", "n", merge_scan_expr(F.col("syms"), lhs, rhs).alias("syms")
+            ).localCheckpoint(eager=True)
+        return merges, words
+
+    params = (n_merges, text_col, max_word_len)
+    return artifacts.shared("bpe", df, params, train)
 
 
 def batch_merge_scan_expr(syms: Column, pairs: list[tuple[str, str]]) -> Column:

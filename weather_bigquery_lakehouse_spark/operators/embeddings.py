@@ -38,86 +38,42 @@ stays the binding one.
 
 from __future__ import annotations
 
-import threading
 from collections.abc import Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .. import artifacts
 from ..functions.numeric import unsign_zero
-
-
-#: Stats frames cache()d by :func:`embedding_covariance`, so consumers
-#: (and bench's per-rep reset) can purge them TARGETED instead of a
-#: global spark.catalog.clearCache(). Bounded BY CONSTRUCTION: at most
-#: one entry per distinct corpus plan — :func:`_register_stats` evicts
-#: the previous same-plan frame before caching a new one. All mutations
-#: hold ``_COV_CACHE_LOCK`` (covariance/whitening may run from
-#: concurrent driver threads; a lock-free rebuild could drop a
-#: concurrently appended frame and leak its cache entry).
-_COV_STATS_CACHE: list[DataFrame] = []
-_COV_CACHE_LOCK = threading.Lock()
-
-
-def purge_covariance_cache() -> None:
-    """Unpersist every stats frame :func:`embedding_covariance` has
-    cache()d this session — the targeted alternative to a global
-    clearCache for bench reps and long-lived sessions sweeping many
-    corpora."""
-    with _COV_CACHE_LOCK:
-        while _COV_STATS_CACHE:
-            _COV_STATS_CACHE.pop().unpersist()
-
-
-def _register_stats(stats: DataFrame) -> None:
-    """Register a freshly cache()d stats frame, first evicting any
-    previously registered frame over the SAME canonicalized plan.
-
-    Spark's CacheManager matches canonicalized plans, so without the
-    eviction a caller that overwrites the source data in place and
-    recomputes covariance would silently read the STALE materialization
-    (and repeat same-corpus calls would grow the registry without
-    bound). ``sameResult`` is the engine's own canonicalized-plan
-    equality; the registry is a handful of dim²-bounded frames, so the
-    O(len) scan is driver-side metadata work.
-    """
-    with _COV_CACHE_LOCK:
-        keep: list[DataFrame] = []
-        new_plan = stats._jdf.queryExecution().logical()
-        for f in _COV_STATS_CACHE:
-            try:
-                same = f._jdf.queryExecution().logical().sameResult(new_plan)
-            except Exception:  # defensive: a dead session's frame
-                same = False
-            if same:
-                f.unpersist()
-            else:
-                keep.append(f)
-        keep.append(stats)
-        _COV_STATS_CACHE[:] = keep
-
-
-def _deregister_stats(stats: DataFrame) -> None:
-    """Tolerant single-frame removal (identity, not ``==`` —
-    ``DataFrame.__eq__`` builds a Column); concurrent appends survive."""
-    with _COV_CACHE_LOCK:
-        _COV_STATS_CACHE[:] = [f for f in _COV_STATS_CACHE if f is not stats]
 
 
 def _covariance_with_stats(
     embeddings: DataFrame,
     dim: int,
-    id_col: str = "vec_id",
     vec_col: str = "embedding",
     scale: int = 1_000_000,
 ) -> tuple[DataFrame, DataFrame]:
-    """Internal: (covariance frame, its cache()d stats frame) — the
-    stats handle exists so :func:`whitening_transform` owns its frame BY
-    CONSTRUCTION (no registry index arithmetic, no cross-thread race).
-    Public callers use :func:`embedding_covariance`.
+    """Internal: (covariance frame, its cache()d stats frame), shared
+    through :func:`..artifacts.shared` — repeat calls over the same
+    corpus reuse the one materialization, and a miss (another corpus, or
+    this path rewritten in place) unpersists the old stats frame BEFORE
+    the new ``cache()``, so Spark's CacheManager can never serve a stale
+    same-plan materialization. The stats handle lets
+    :func:`whitening_transform` read the means from the same pass.
+    Public callers use :func:`embedding_covariance`."""
+    return artifacts.shared(
+        "covariance_stats",
+        embeddings,
+        (dim, vec_col, scale),
+        lambda: _build_covariance(embeddings, dim, vec_col, scale),
+    )
 
-    Population covariance of the corpus embedding matrix, long-form:
+
+def _build_covariance(
+    embeddings: DataFrame, dim: int, vec_col: str, scale: int
+) -> tuple[DataFrame, DataFrame]:
+    """Population covariance of the corpus embedding matrix, long-form:
     one row per (i, j) with i ≤ j — ``cov = (n·G_ij − S_i·S_j) / n²`` over
     ``scale``-quantized elements, rounded to 6dp (scalar-typed rows for
     the hash gate, like ``embedding_centroids``).
@@ -131,17 +87,10 @@ def _covariance_with_stats(
     into TWO extra corpus scans — 3x read amplification at 100 TB); one
     combinable (i, j) sum; the dim²-bounded stats frame is cache()d (NOT
     localCheckpoint'ed — cache keeps the kernel subtree visible to plan
-    lint, but ALSO means Spark's CacheManager matches canonicalized
-    plans across runs, so repeat invocations hit the cache; the frame
-    registers via :func:`_register_stats`, which first EVICTS any prior
-    same-canonicalized-plan frame — so an in-place overwrite of the
-    source can never serve a stale materialization and the registry
-    stays bounded at one entry per distinct corpus;
-    :func:`purge_covariance_cache` drops everything — bench calls it per
-    rep, long-lived sessions can too)
-    so its g/s/n slices share one materialization; the dim-bounded sum
-    tables broadcast onto the dim²-bounded result. Nothing
-    data-proportional shuffles or collects.
+    lint; its lifetime is the artifact-store slot's, see
+    :func:`_covariance_with_stats`) so its g/s/n slices share one
+    materialization; the dim-bounded sum tables broadcast onto the
+    dim²-bounded result. Nothing data-proportional shuffles or collects.
     """
     import pandas as pd  # noqa: F401 — mapInPandas contract
 
@@ -195,7 +144,6 @@ def _covariance_with_stats(
         # InMemoryTableScan instead of re-planning the corpus scan
         .cache()
     )
-    _register_stats(stats)
     g = stats.where((F.col("i") >= 0) & (F.col("j") >= 0))
     s = stats.where((F.col("i") >= 0) & (F.col("j") == -1)).select(
         F.col("i").alias("pos"), F.col("g").alias("s")
@@ -241,14 +189,13 @@ def embedding_covariance(
     scale: int = 1_000_000,
 ) -> DataFrame:
     """Population covariance, long-form (i <= j) — see
-    :func:`_covariance_with_stats` for the one-pass plan narrative and
-    the decimal-numerator overflow discipline. The stats frame it
-    cache()s registers in ``_COV_STATS_CACHE`` with same-plan eviction
-    (recomputing over an overwritten source is always FRESH, and repeat
-    same-corpus calls don't grow the registry); call
-    :func:`purge_covariance_cache` to drop all cached stats in
-    long-lived sessions (bench does, per rep)."""
-    cov, _stats = _covariance_with_stats(embeddings, dim, id_col, vec_col, scale)
+    :func:`_build_covariance` for the one-pass plan narrative and the
+    decimal-numerator overflow discipline. The stats frame it cache()s
+    lives in the ``"covariance_stats"`` artifact slot: repeat calls over
+    the same corpus share it, recomputing over an overwritten source is
+    always FRESH, and ``artifacts.clear("covariance_stats")`` drops it
+    (bench does, per rep)."""
+    cov, _stats = _covariance_with_stats(embeddings, dim, vec_col, scale)
     return cov
 
 
@@ -273,8 +220,9 @@ def whitening_transform(
     dominated by ``eps`` in the eigenvalue floor; the pre-r10 shape paid
     a second full corpus scan for float-exact means). whitening is a
     terminal driver-side consumer, so it unpersists its own stats frame
-    in a ``finally`` — self-cleaning by default (no leak across corpora,
-    no stale CacheManager hit if the same path is overwritten in place).
+    in a ``finally``, by clearing its artifact slot — self-cleaning by
+    default (no leak across corpora, no stale CacheManager hit if the
+    same path is overwritten in place).
     The one cost: unpersist is plan-keyed, so a SIBLING covariance over
     the same corpus still lazy elsewhere loses its cache entry and
     recomputes when collected — slower, never wrong; callers holding
@@ -283,9 +231,7 @@ def whitening_transform(
     oracle-gated."""
     import numpy as np
 
-    cov_df, stats = _covariance_with_stats(
-        embeddings, dim, id_col, vec_col, scale=scale
-    )
+    cov_df, stats = _covariance_with_stats(embeddings, dim, vec_col, scale)
     try:
         c = np.zeros((dim, dim))
         for r in cov_df.collect():
@@ -302,8 +248,7 @@ def whitening_transform(
         # empty/all-null corpus: c and mu stay zero — W degrades to the
         # eps-floored identity scaling, matching the pre-r10 behavior
     finally:
-        stats.unpersist()
-        _deregister_stats(stats)
+        artifacts.clear("covariance_stats")
     lam, v = np.linalg.eigh(c)
     w = v @ np.diag(1.0 / np.sqrt(np.maximum(lam, 0.0) + eps)) @ v.T
     return w, mu

@@ -55,11 +55,11 @@ Neighbor Search", TPAMI 2011 — subspace codebooks trained independently).
 
 from __future__ import annotations
 
-import threading as _threading
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from .. import artifacts
 
 MICRO = 1_000_000  # micro-unit quantization scale (matches pq_topk's ADC)
 
@@ -344,26 +344,6 @@ def train_grouped_codebook(
     )
 
 
-#: One-slot memos for the trained quantizer frames — the
-#: ``similarity._PAIR_CLUSTER_CACHE`` contract: the trained frames sit on
-#: localCheckpointed blocks valid only within the session that built them
-#: (applicationId in the key), so a registry sweep that greets the same
-#: corpus from several entries (the staged codebook/centroid gates and
-#: the recall report) trains ONCE and shares the WORK — results are
-#: deterministic either way, only wall-clock changes.
-#:
-#: Thread-safety (ADVICE r13): ann_recall_report trains from a thread
-#: pool, so dict reads/writes are lock-guarded. The locks cover only the
-#: dict operations, never the training itself — two concurrent MISSES on
-#: the same key may both train (wasted work, identical deterministic
-#: results; the second insert wins), but the one-slot clear-then-insert
-#: can no longer interleave.
-_PQ_CB_CACHE: dict[tuple, DataFrame] = {}
-_PQ_CB_LOCK = _threading.Lock()
-_CENTROID_CACHE: dict[tuple, DataFrame] = {}
-_CENTROID_LOCK = _threading.Lock()
-
-
 def kmeans_pq_codebook(
     embeddings: DataFrame,
     dim: int,
@@ -373,44 +353,33 @@ def kmeans_pq_codebook(
     sample_n: int | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    cache_key: object = None,
 ) -> DataFrame:
     """Trained PQ codebook ``(sub_id, code_id, __cv)`` — drop-in for the
     first-n stand-in via ``pq_topk(..., codebook=)`` / ``ivfpq_topk``.
     All ``m`` subspace codebooks train in the same jobs (grouped k-means
     on the posexploded subvectors — Jégou et al. 2011 trains subspaces
     independently, which grouping by ``sub_id`` expresses exactly).
-    Pass ``cache_key`` (the caller-owned input identity, e.g. the dataset
-    path) to memoize the trained frame for sibling queries."""
+    The trained frame sits on localCheckpointed blocks shared through
+    :func:`..artifacts.shared`, so sibling entries over the same corpus
+    (the staged codebook gate and the recall report) train ONCE."""
     from .similarity import _pq_sub, _subspaces
 
-    key = None
-    if cache_key is not None:
-        key = (
-            embeddings.sparkSession.sparkContext.applicationId,
-            cache_key, dim, m, n_codes, n_iter, sample_n, id_col, vec_col,
+    def train() -> DataFrame:
+        sub = _pq_sub(dim, m)
+        subs = _subspaces(embeddings, "__kid", m, sub, id_col, vec_col)
+        return train_grouped_codebook(
+            subs,
+            n_codes=n_codes,
+            n_iter=n_iter,
+            group_col="sub_id",
+            id_col="__kid",
+            vec_col="__sv",
+            sample_n=sample_n,
+            width=sub,
         )
-        with _PQ_CB_LOCK:
-            hit = _PQ_CB_CACHE.get(key)
-        if hit is not None:
-            return hit
-    sub = _pq_sub(dim, m)
-    subs = _subspaces(embeddings, "__kid", m, sub, id_col, vec_col)
-    out = train_grouped_codebook(
-        subs,
-        n_codes=n_codes,
-        n_iter=n_iter,
-        group_col="sub_id",
-        id_col="__kid",
-        vec_col="__sv",
-        sample_n=sample_n,
-        width=sub,
-    )
-    if key is not None:
-        with _PQ_CB_LOCK:
-            _PQ_CB_CACHE.clear()
-            _PQ_CB_CACHE[key] = out
-    return out
+
+    params = (dim, m, n_codes, n_iter, sample_n, id_col, vec_col)
+    return artifacts.shared("pq_codebook", embeddings, params, train)
 
 
 def kmeans_centroids(
@@ -420,7 +389,6 @@ def kmeans_centroids(
     sample_n: int | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    cache_key: object = None,
     dim: int | None = None,
 ) -> DataFrame:
     """Trained IVF centroids ``(cell_id, centroid)`` — the single-group
@@ -428,38 +396,28 @@ def kmeans_centroids(
     query time, the usual pairing for roughly-normalized embeddings).
     Drop-in for the first-``n_cells`` stand-in via
     ``ivf_topk(..., centroids=)`` / ``ivfpq_topk(..., centroids=)``.
-    ``cache_key`` memoizes like :func:`kmeans_pq_codebook`. ``dim`` (the
+    Shared across siblings like :func:`kmeans_pq_codebook`. ``dim`` (the
     statically known vector width) enables the unrolled one-exchange
     Lloyd update — see :func:`train_grouped_codebook`."""
-    key = None
-    if cache_key is not None:
-        key = (
-            embeddings.sparkSession.sparkContext.applicationId,
-            cache_key, n_cells, n_iter, sample_n, id_col, vec_col, dim,
+
+    def train() -> DataFrame:
+        single = embeddings.select(
+            F.lit(0).alias("__grp"), F.col(id_col), F.col(vec_col)
         )
-        with _CENTROID_LOCK:
-            hit = _CENTROID_CACHE.get(key)
-        if hit is not None:
-            return hit
-    single = embeddings.select(
-        F.lit(0).alias("__grp"), F.col(id_col), F.col(vec_col)
-    )
-    cb = train_grouped_codebook(
-        single,
-        n_codes=n_cells,
-        n_iter=n_iter,
-        group_col="__grp",
-        id_col=id_col,
-        vec_col=vec_col,
-        sample_n=sample_n,
-        code_col="cell_id",
-        out_vec_col="centroid",
-        single_group=True,
-        width=dim,
-    )
-    out = cb.select("cell_id", "centroid")
-    if key is not None:
-        with _CENTROID_LOCK:
-            _CENTROID_CACHE.clear()
-            _CENTROID_CACHE[key] = out
-    return out
+        cb = train_grouped_codebook(
+            single,
+            n_codes=n_cells,
+            n_iter=n_iter,
+            group_col="__grp",
+            id_col=id_col,
+            vec_col=vec_col,
+            sample_n=sample_n,
+            code_col="cell_id",
+            out_vec_col="centroid",
+            single_group=True,
+            width=dim,
+        )
+        return cb.select("cell_id", "centroid")
+
+    params = (n_cells, n_iter, sample_n, id_col, vec_col, dim)
+    return artifacts.shared("centroids", embeddings, params, train)

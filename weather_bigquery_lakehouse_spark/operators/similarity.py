@@ -15,6 +15,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .. import artifacts
+
 SIM_DECIMALS = 6  # round similarities before ranking → engine-portable order
 
 
@@ -500,19 +502,6 @@ def _validated_codebook(codebook: DataFrame, m: int) -> DataFrame:
     return F.broadcast(cb)
 
 
-#: Attribute set on a broadcast codebook frame whose completeness check
-#: already ran — `_as_codebook` passes such frames through so several
-#: scorers share ONE validation job instead of each re-running the same
-#: distinct-``sub_id`` probe (the report entry consumes one codebook from
-#: five scorers). Plain DataFrames are still validated per consumer.
-_PREVALIDATED_ATTR = "_wbl_codebook_prevalidated"
-
-
-def _mark_prevalidated(cb: DataFrame) -> DataFrame:
-    setattr(cb, _PREVALIDATED_ATTR, True)
-    return cb
-
-
 def pq_codebook_standin(
     embeddings: DataFrame,
     dim: int,
@@ -524,31 +513,24 @@ def pq_codebook_standin(
     """Public builder for the deterministic stand-in PQ codebook (the
     first-``n_codes``-vectors convention shared by :func:`pq_topk` /
     :func:`ivfpq_topk` / :func:`pq_distortion`), returned broadcast-ready
-    and marked prevalidated (the builder's completeness count IS the
-    check). Building it ONCE and passing the result as ``codebook`` lets
-    several scorers share one completeness-check job instead of each
-    re-counting the same ≤ m·n_codes-row frame."""
-    return _mark_prevalidated(
-        _pq_codebook(embeddings, m, _pq_sub(dim, m), n_codes, id_col, vec_col)
-    )
-
-
-def validate_codebook(codebook: DataFrame, m: int) -> DataFrame:
-    """Public form of the supplied-codebook completeness check: validate
-    ONCE (one small job) and reuse the returned broadcast frame across
-    every scorer that takes a ``codebook`` — instead of each consumer
-    re-running the same distinct-``sub_id`` probe on the same frame."""
-    return _mark_prevalidated(_validated_codebook(codebook, m))
+    and recorded in the artifact store as validated for THIS ``m`` (its
+    own completeness count IS the check). Building it ONCE and
+    passing the result as ``codebook`` lets several scorers share one
+    completeness-check job instead of each re-counting the same
+    ≤ m·n_codes-row frame; a consumer at another ``m`` re-validates."""
+    cb = _pq_codebook(embeddings, m, _pq_sub(dim, m), n_codes, id_col, vec_col)
+    return artifacts.shared("codebook_check", cb, (m,), lambda: cb)
 
 
 def _as_codebook(codebook: DataFrame, m: int) -> DataFrame:
-    """Normalize the ``codebook`` argument the PQ scorers accept: a frame
-    marked prevalidated (:func:`pq_codebook_standin` /
-    :func:`validate_codebook`) passes through; any other DataFrame is
-    validated here (one small job)."""
-    if getattr(codebook, _PREVALIDATED_ATTR, False):
-        return codebook
-    return _validated_codebook(codebook, m)
+    """Normalize the ``codebook`` argument the PQ scorers accept: validate
+    it for ``m`` through :func:`..artifacts.shared`, so consecutive
+    scorers handed the same codebook at the same ``m`` share ONE
+    distinct-``sub_id`` probe, and a codebook checked at another ``m`` is
+    checked again."""
+    return artifacts.shared(
+        "codebook_check", codebook, (m,), lambda: _validated_codebook(codebook, m)
+    )
 
 
 def pq_encode_cells(
@@ -579,10 +561,11 @@ def pq_encode_cells(
       compares ``__d`` first).
 
     ``corpus_cells`` is :func:`assign_cells` output (id, vec, __norm,
-    cell_id); ``codebook`` as for :func:`pq_topk` (a prevalidated broadcast
-    frame passes through). Scale shape matches the inline encodes: the codebook
-    broadcasts, the argmin map-side combines on (vector, cell, subspace),
-    and only (id, cell, m codes, m distances) rows survive."""
+    cell_id); ``codebook`` as for :func:`pq_topk` (validated once per
+    ``m`` through the artifact store). Scale shape matches the inline
+    encodes: the codebook broadcasts, the argmin map-side combines on
+    (vector, cell, subspace), and only (id, cell, m codes, m distances)
+    rows survive."""
     sub = _pq_sub(dim, m)
     cb = _as_codebook(codebook, m)
     arr = F.array(*[F.slice(F.col(vec_col), s * sub + 1, sub) for s in range(m)])
@@ -660,8 +643,8 @@ def pq_topk(
     broadcast probe tables and reduces with one combinable integer sum
     per (probe, vector). No vector ever crosses a shuffle after encode.
 
-    ``codebook`` may be a prevalidated broadcast frame (see
-    :func:`pq_codebook_standin` / :func:`validate_codebook`).
+    ``codebook`` is validated once per ``m`` through
+    :func:`..artifacts.shared` (see :func:`pq_codebook_standin`).
     ``codes`` optionally supplies a
     PRECOMPUTED corpus encode — ``(neighbor_id, sub_id, code_id)`` rows
     against exactly this (``embeddings``, ``codebook``) pair, e.g. a
@@ -859,8 +842,8 @@ def ivfpq_topk(
     boundary neighbors, finer codebooks tighten the distance estimate.
 
     Sharing parameters (all assert-equivalence, identical results by
-    construction): ``codebook`` may be a prevalidated broadcast frame
-    (:func:`pq_codebook_standin` / :func:`validate_codebook`);
+    construction): ``codebook`` is validated once per ``m`` through
+    :func:`..artifacts.shared` (see :func:`pq_codebook_standin`);
     ``corpus_cells`` a precomputed
     :func:`assign_cells` output over exactly this (``embeddings``,
     ``centroids``) pair; ``codes`` a precomputed
@@ -961,56 +944,33 @@ def ivfpq_topk(
     )
 
 
-#: One-slot memo for the shared pair+CC stage. The embedding-audit family
-#: (dup clusters, label purity, contrastive mining) consumes the SAME
-#: (pairs, labels) frames; without sharing, one registry sweep pays the
-#: iterative CC latency floor three times (measured 6.5 + 6.0 + 6.8 s at
-#: sf0.1 — round-6 verdict #5). One slot bounds the executor blocks the
-#: cached localCheckpoints hold; the key carries the applicationId so a
-#: new session (whose executors no longer hold the old blocks) can never
-#: resurrect a dead checkpoint.
-_PAIR_CLUSTER_CACHE: dict[tuple, tuple[DataFrame, DataFrame]] = {}
-
-
 def embedding_pair_clusters(
     embeddings: DataFrame,
     planes: list[list[float]],
     threshold: float = 0.3,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    cache_key: object = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Shared front end of the embedding-audit family: LSH-bucketed
     near-dup ``pairs`` (localCheckpointed — consumed by CC AND by the
     callers' own rankings) plus their connected-component ``labels``
-    (node, comp). Pass ``cache_key`` (the caller-owned identity of the
-    input, e.g. the dataset path) to memoize the checkpointed frames so
-    sibling audits in the same session reuse the WORK, not just the code
-    — results are deterministic either way, only wall-clock changes."""
+    (node, comp). The checkpointed frames are shared through
+    :func:`..artifacts.shared`, so sibling audits over the same corpus
+    (dup clusters, label purity, contrastive mining) reuse the WORK, not
+    just the code: without sharing one registry sweep paid the iterative
+    CC latency floor three times (6.5 + 6.0 + 6.8 s at sf0.1, round-6
+    verdict #5). Results are deterministic either way."""
     from .dedup import connected_components
 
-    key = None
-    if cache_key is not None:
-        key = (
-            embeddings.sparkSession.sparkContext.applicationId,
-            cache_key,
-            tuple(tuple(p) for p in planes),
-            threshold,
-            id_col,
-            vec_col,
-        )
-        hit = _PAIR_CLUSTER_CACHE.get(key)
-        if hit is not None:
-            return hit
-    pairs = embedding_near_dup_pairs(
-        embeddings, planes, threshold, id_col, vec_col
-    ).localCheckpoint(eager=True)
-    labels = connected_components(pairs, left_col="vec_a", right_col="vec_b")
-    out = (pairs, labels)
-    if key is not None:
-        _PAIR_CLUSTER_CACHE.clear()
-        _PAIR_CLUSTER_CACHE[key] = out
-    return out
+    def build() -> tuple[DataFrame, DataFrame]:
+        pairs = embedding_near_dup_pairs(
+            embeddings, planes, threshold, id_col, vec_col
+        ).localCheckpoint(eager=True)
+        labels = connected_components(pairs, left_col="vec_a", right_col="vec_b")
+        return pairs, labels
+
+    params = (tuple(tuple(p) for p in planes), threshold, id_col, vec_col)
+    return artifacts.shared("pair_clusters", embeddings, params, build)
 
 
 def contrastive_pairs(
@@ -1019,7 +979,6 @@ def contrastive_pairs(
     threshold: float = 0.3,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    cache_key: object = None,
 ) -> DataFrame:
     """Hard-pair mining for contrastive embedding training: for every
     vector that belongs to a near-dup cluster AND shares an LSH bucket
@@ -1048,7 +1007,7 @@ def contrastive_pairs(
     break on ids, so the mined pairs are engine-portable.
     """
     pairs, labels = embedding_pair_clusters(
-        embeddings, planes, threshold, id_col, vec_col, cache_key=cache_key
+        embeddings, planes, threshold, id_col, vec_col
     )
 
     pos_cand = pairs.select(

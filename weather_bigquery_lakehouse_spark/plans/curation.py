@@ -1302,7 +1302,7 @@ def embedding_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _views(spark, sf_dir, ["embeddings"])["embeddings"]
     _pairs, labels = sim.embedding_pair_clusters(
-        emb, _PLANES, threshold=_EMB_DUP_THRESHOLD, cache_key=sf_dir
+        emb, _PLANES, threshold=_EMB_DUP_THRESHOLD
     )
     return labels.select(
         F.col("node").alias("vec_id"),
@@ -2236,7 +2236,7 @@ def contrastive_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _views(spark, sf_dir, ["embeddings"])["embeddings"]
     return sim.contrastive_pairs(
-        emb, _PLANES, threshold=_EMB_DUP_THRESHOLD, cache_key=sf_dir
+        emb, _PLANES, threshold=_EMB_DUP_THRESHOLD
     )
 
 
@@ -2305,7 +2305,7 @@ def cluster_label_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _views(spark, sf_dir, ["embeddings"])["embeddings"]
     _pairs, clusters = sim.embedding_pair_clusters(
-        emb, _PLANES, threshold=_EMB_DUP_THRESHOLD, cache_key=sf_dir
+        emb, _PLANES, threshold=_EMB_DUP_THRESHOLD
     )
     member = clusters.select(
         F.col("node").alias("vec_id"), F.col("comp").cast("bigint").alias("cluster_id")

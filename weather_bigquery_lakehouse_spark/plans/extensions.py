@@ -1566,8 +1566,7 @@ FROM kmt, UNNEST(range(1, {_PQ_SUB} + 1)) AS u(i)
 def ann_kmeans_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _views(spark, sf_dir, ["embeddings"])["embeddings"]
     cb = km.kmeans_pq_codebook(
-        emb, dim=_PQ_DIM, m=_PQ_M, n_codes=_PQ_CODES, n_iter=_KM_ITER,
-        cache_key=sf_dir,
+        emb, dim=_PQ_DIM, m=_PQ_M, n_codes=_PQ_CODES, n_iter=_KM_ITER
     )
     return cb.select(
         F.col("sub_id").cast("int").alias("sub_id"),
@@ -1609,8 +1608,7 @@ FROM kmt, UNNEST(range(1, {_DIM} + 1)) AS u(i)
 def ann_kmeans_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _views(spark, sf_dir, ["embeddings"])["embeddings"]
     cent = km.kmeans_centroids(
-        emb, n_cells=_N_CELLS, n_iter=_KM_ITER, sample_n=_KM_SAMPLE_N,
-        cache_key=sf_dir,
+        emb, n_cells=_N_CELLS, n_iter=_KM_ITER, sample_n=_KM_SAMPLE_N
     )
     return cent.select(
         F.col("cell_id").cast("int").alias("cell_id"),
@@ -1675,8 +1673,7 @@ FROM occ, tot
 def ivf_cell_occupancy(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _views(spark, sf_dir, ["embeddings"])["embeddings"]
     cent_t = km.kmeans_centroids(
-        emb, n_cells=_N_CELLS, n_iter=_KM_ITER, sample_n=_KM_SAMPLE_N,
-        cache_key=sf_dir,
+        emb, n_cells=_N_CELLS, n_iter=_KM_ITER, sample_n=_KM_SAMPLE_N
     )
     cent_s = emb.where(F.col("vec_id") < _N_CELLS).select(
         F.col("vec_id").alias("cell_id"), F.col("embedding").alias("centroid")
@@ -1919,14 +1916,12 @@ def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def _train_cb():
         return km.kmeans_pq_codebook(
-            emb, dim=_PQ_DIM, m=_PQ_M, n_codes=_PQ_CODES, n_iter=_KM_ITER,
-            cache_key=sf_dir,
+            emb, dim=_PQ_DIM, m=_PQ_M, n_codes=_PQ_CODES, n_iter=_KM_ITER
         )
 
     def _train_cent():
         return km.kmeans_centroids(
-            emb, n_cells=_N_CELLS, n_iter=_KM_ITER, sample_n=_KM_SAMPLE_N,
-            cache_key=sf_dir,
+            emb, n_cells=_N_CELLS, n_iter=_KM_ITER, sample_n=_KM_SAMPLE_N
         )
 
     def _assign_corpus():
@@ -1950,8 +1945,7 @@ def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         cells_s = _f_cells.result()
         _f_enc_s = _pool.submit(_encode, cells_s, cb_s)
         cb_t = _f_cb.result()
-        cb_t_col = sim.validate_codebook(cb_t, _PQ_M)
-        _f_enc_t = _pool.submit(_encode, cells_s, cb_t_col)
+        _f_enc_t = _pool.submit(_encode, cells_s, cb_t)
         truths = {"cos": _f_cos.result(), "l2": _f_l2.result()}
         cent_t = _f_cent.result()
         enc_s = _f_enc_s.result()
@@ -1990,9 +1984,9 @@ def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-run with k-means codebooks/centroids. Training configs are
     # IDENTICAL to the staged ann_kmeans_codebook / ann_kmeans_centroids
     # gates (centroids train on the md5-ordered sample — the production
-    # shape) and share their one-slot memos via cache_key, so a registry
-    # sweep trains each quantizer once; the staged entries own the cold
-    # build in the bench (PRE_REP purges their memos). cb_t / cent_t were
+    # shape) and share their trained frames through artifacts.shared, so a
+    # registry sweep trains each quantizer once; the staged entries own the
+    # cold build in the bench (PRE_REP clears their kinds). cb_t / cent_t were
     # trained above, overlapped with the ground-truth checkpoints.
     methods["ivf_trained"] = (
         "cos",
@@ -2005,7 +1999,7 @@ def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l2",
         sim.pq_topk(
             emb, probes, dim=_PQ_DIM, m=_PQ_M, n_codes=_PQ_CODES,
-            k=_TOP_K, codebook=cb_t_col, codes=enc_t,
+            k=_TOP_K, codebook=cb_t, codes=enc_t,
         ),
     )
     # the composed index keeps the sampled-anchor coarse quantizer and
@@ -2020,7 +2014,7 @@ def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         sim.ivfpq_topk(
             emb, probes, dim=_PQ_DIM, n_cells=_N_CELLS,
             n_probe_cells=_N_IVF_PROBE_CELLS, m=_PQ_M,
-            n_codes=_PQ_CODES, k=_TOP_K, codebook=cb_t_col, codes=enc_t,
+            n_codes=_PQ_CODES, k=_TOP_K, codebook=cb_t, codes=enc_t,
         ),
     )
     scored = None
@@ -2195,7 +2189,7 @@ w{t + 1} AS (
 def _bpe_state(spark: SparkSession, sf_dir: str):
     docs = _views(spark, sf_dir, ["documents"])["documents"]
     return bpe.bpe_train(
-        docs, n_merges=_BPE_MERGES, max_word_len=_BPE_MAX_WORD, cache_key=sf_dir
+        docs, n_merges=_BPE_MERGES, max_word_len=_BPE_MAX_WORD
     )
 
 
@@ -2235,7 +2229,7 @@ GROUP BY token
     "of every training word, so one mis-merged word anywhere flips the "
     "gate; one combinable aggregate over the exploded symbol stream "
     "(bounded by chars + merges)",
-    retired=True,  # staged round 8: window full; shares the trained state with bpe_merge_table via the one-slot memo
+    retired=True,  # staged round 8: window full; shares the trained state with bpe_merge_table via artifacts.shared
 )
 def bpe_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     _, words = _bpe_state(spark, sf_dir)

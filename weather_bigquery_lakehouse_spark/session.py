@@ -80,8 +80,3 @@ def build_session(
     spark.sparkContext.setLogLevel("WARN")
     return spark
 
-
-def get_session() -> SparkSession:
-    """Return the active session, building a default one if none exists."""
-    active = SparkSession.getActiveSession()
-    return active if active is not None else build_session()
